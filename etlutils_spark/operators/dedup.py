@@ -50,7 +50,7 @@ from etlutils_spark.sources.sidecar import (
     read_sidecar_json,
     read_sidecar_text,
     release_writer_lease,
-    sidecar_kind,
+    sidecar_present,
     verify_writer_lease,
     write_sidecar_json,
     write_sidecar_text,
@@ -671,22 +671,28 @@ def embedding_neardup_pairs(
     )
 
 
+# connected_components labels graphs of at most this many edges with
+# union-find on the driver (~2 MB collected); larger graphs run star
+_CC_DRIVER_EDGE_LIMIT = 65_536
+# star round cap: O(log n) rounds suffice on any graph
+_CC_MAX_ROUNDS = 25
+
+
 def _cc_driver_small(
     pairs: DataFrame,
     left: str,
     right: str,
-    stats: dict | None,
-    limit: int,
+    stats: dict | None = None,
 ) -> "DataFrame | None":
-    """The bounded small-graph fast path behind
-    ``connected_components(algorithm="auto")``: collect at most
-    ``limit`` edges (the probe is a pushed-down ``limit(limit + 1)`` —
-    an over-limit graph costs one truncated scan and returns None for
-    the distributed fallback) and run path-compressed union-find on
-    the driver. Output schema and values match the distributed
-    algorithms exactly: one ``(node, cluster_id)`` row per node
+    """The bounded small-graph path of :func:`connected_components`:
+    collect at most ``_CC_DRIVER_EDGE_LIMIT`` edges (the probe is a
+    pushed-down ``limit(limit + 1)`` — an over-limit graph costs one
+    truncated scan and returns None for the star fallback) and run
+    path-compressed union-find on the driver. Output schema and values match
+    :func:`_cc_star` exactly: one ``(node, cluster_id)`` row per node
     appearing in any edge, cluster_id = component minimum."""
     spark = pairs.sparkSession
+    limit = _CC_DRIVER_EDGE_LIMIT
     rows = (
         pairs.select(
             F.col(left).cast("long"), F.col(right).cast("long")
@@ -739,144 +745,47 @@ def connected_components(
     pairs: DataFrame,
     left: str = "doc_id_1",
     right: str = "doc_id_2",
-    max_iter: int = 25,
-    algorithm: str = "minlabel",
     stats: dict | None = None,
-    small_graph_limit: int = 65_536,
 ) -> DataFrame:
     """Union-find over an undirected pair list: (node, cluster_id) where
     cluster_id = the minimum node id in the node's connected component —
     the step that turns near-dup PAIRS into an actionable keep/drop
     assignment (keep cluster_id == node, drop the rest).
 
-    ``algorithm="minlabel"`` (default): each round every node takes the
-    min of its own label and its neighbors' labels; converges in
-    O(graph diameter) rounds (dup clusters are near-cliques — diameter
-    1-2) with an O(E) shuffle per round, all join/groupBy (no
-    driver-side graph). Each round is AQE-planned independently; labels
-    persist round-to-round and are freed on replacement.
+    Probes the edge count with a pushed-down ``limit``; at or under
+    65,536 edges (~2 MB collected) it runs union-find DRIVER-SIDE — one
+    cheap probe job plus one createDataFrame instead of O(log n) rounds
+    of eager checkpoints, each of which costs ~0.5-1 s of fixed
+    scheduling regardless of data size. Past the limit it runs the
+    alternating large-star/small-star algorithm (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014) —
+    O(log n) rounds on ANY graph, independent of diameter, at ~2
+    edge-shuffles per round; the probe stops scanning at limit+1 rows,
+    so big graphs pay one truncated scan, never a collect. The labels
+    are identical by construction (component minimum, no ties), pinned
+    by a differential test.
 
-    ``algorithm="star"``: the alternating large-star/small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — O(log n) rounds on ANY graph, independent of
-    diameter, at ~2 edge-shuffles per round. The right choice when the
-    pair graph is arbitrary (e.g. ``leakage_safe_split`` over mixed
-    link sources, long chains of pairwise matches) rather than the
-    near-clique dup graphs min-label is tuned for; see the chain-graph
-    test for the round-count separation.
-
-    ``algorithm="auto"``: probe the edge count with a pushed-down
-    ``limit``; at or under ``small_graph_limit`` edges (default 65536,
-    ~2 MB collected) run union-find DRIVER-SIDE — one cheap probe job
-    plus one createDataFrame instead of O(log n) rounds of eager
-    checkpoints, each of which costs ~0.5-1 s of fixed scheduling
-    regardless of data size (measured: the per-round checkpoints were
-    ~6 s of the streaming index's ~10 s per-batch floor, on graphs of
-    a few hundred edges). Past the limit it IS the star algorithm —
-    the probe stops scanning at limit+1 rows, so big graphs pay one
-    truncated scan, never a collect. The labels are identical by
-    construction (component minimum, no ties), pinned by a
-    differential test. This is the affected-scope refresh's CC mode:
-    the compressed touched-component graph is dup-mass-of-touched-
-    components-sized — tiny for focused batches at ANY corpus size —
-    while a corpus-wide merge storm still falls through to star.
-    Caveat: on overflow the star fallback re-reads the input, so feed
-    "auto" a MATERIALIZED frame (stored parquet, persisted, or
-    checkpointed) when the pair pipeline is expensive — the index
-    forms read stored edge tables, and ``build_dedup_clusters``
-    persists its live chain before calling in. Null endpoints route
-    to the distributed path (the driver probe returns None on any
-    null) so behavior never depends on edge count.
+    On overflow the star fallback re-reads the input, so feed a
+    MATERIALIZED frame (stored parquet, persisted, or checkpointed)
+    when the pair pipeline is expensive — the index forms read stored
+    edge tables, and ``build_dedup_clusters`` persists its live chain
+    before calling in. Null endpoints route to star (the driver probe
+    returns None on any null) so behavior never depends on edge count.
 
     ``stats``: optional dict, receives ``{"rounds": n}`` for plan
-    audits and tests (``rounds == 0`` marks the driver fast path).
+    audits and tests (``rounds == 0`` marks the driver path).
     """
-    if algorithm == "auto":
-        out = _cc_driver_small(pairs, left, right, stats, small_graph_limit)
-        if out is not None:
-            return out
-        return _cc_star(pairs, left, right, max_iter, stats)
-    if algorithm == "star":
-        return _cc_star(pairs, left, right, max_iter, stats)
-    if algorithm != "minlabel":
-        raise ValueError(
-            f"algorithm={algorithm!r}: use 'minlabel' (diameter-bounded, "
-            "dup-graph default), 'star' (log-bounded, general graphs), "
-            "or 'auto' (driver union-find under a bounded edge count, "
-            "star beyond)"
-        )
-    e = pairs.select(
-        F.col(left).cast("long").alias("a"), F.col(right).cast("long").alias("b")
-    )
-    edges = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = (
-        edges.select(F.col("a").alias("node")).distinct()
-        .withColumn("comp", F.col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        nbr = (
-            edges.join(labels, edges["b"] == labels["node"])
-            .groupBy("a").agg(F.min("comp").alias("nbr_comp"))
-        )
-        # localCheckpoint (not persist): the round's plan references the
-        # prior labels multiple times, so without lineage truncation the
-        # logical tree doubles per round — exponential analysis memory
-        # on long-diameter graphs. Checkpointing materializes the ~node
-        # table and restarts lineage each round. (At cluster scale with
-        # preemptible executors, swap for reliable checkpoint() to a
-        # checkpoint dir — same call shape.)
-        new_labels = (
-            labels.join(nbr, labels["node"] == nbr["a"], "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        # unpersist() frees the round-0 PERSISTED table; checkpointed
-        # rounds are a CacheManager no-op — their blocks are released by
-        # the ContextCleaner once the reassignment below drops the last
-        # reference (prompt under CPython refcounting), so live storage
-        # stays ~2 round-tables deep
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds; labels would be partially propagated (cluster_id != "
-            "component minimum). Raise max_iter — rounds needed is O(graph "
-            "diameter), or switch to algorithm='star' (O(log n) rounds)."
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels.select("node", F.col("comp").alias("cluster_id"))
+    out = _cc_driver_small(pairs, left, right, stats)
+    if out is not None:
+        return out
+    return _cc_star(pairs, left, right, stats)
 
 
 def _cc_star(
     pairs: DataFrame,
     left: str,
     right: str,
-    max_iter: int,
-    stats: dict | None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Alternating large-star/small-star rounds (Kiveris et al. 2014).
 
@@ -899,8 +808,8 @@ def _cc_star(
     # persisted table — everything else derives from it. Self-loops are
     # dropped from the EDGE set only; the node set below is built from
     # the unfiltered pair list so a node whose only pairs are (u, u)
-    # still appears in the output labeled to itself — matching
-    # algorithm='minlabel' row-for-row (round-6 advice fix).
+    # still appears in the output labeled to itself — matching the
+    # driver path row-for-row (round-6 advice fix).
     edges = (
         raw.filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
@@ -921,7 +830,7 @@ def _cc_star(
     rounds = 0
     prev_count = edges.count()
     raw.unpersist()
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         rounds += 1
         # Large-Star: m(u) = min over Gamma(u) ∪ {u}; emit (w, m) for
         # every neighbor w > u. w > u >= m, so orientation holds.
@@ -938,9 +847,11 @@ def _cc_star(
         # Small-Star on the oriented list: every smaller neighbor w != m
         # and u itself attach to m = min of u's smaller neighborhood.
         smins = after_large.groupBy("u").agg(F.min("v").alias("m"))
-        # localCheckpoint for the same reason as min-label: new_edges'
+        # localCheckpoint (not persist) truncates lineage: new_edges'
         # plan holds after_large ~3x and after_large holds sym 2x, so
-        # un-truncated lineage grows ~6x per round.
+        # un-truncated lineage grows ~6x per round — exponential
+        # analysis memory. (At cluster scale with preemptible
+        # executors, swap for reliable checkpoint() — same call shape.)
         new_edges = (
             after_large.join(smins, "u")
             .filter(F.col("v") != F.col("m"))
@@ -959,8 +870,10 @@ def _cc_star(
             or new_edges.exceptAll(edges).limit(1).count() > 0
         )
         prev_count = new_count
-        # frees the round-0 persisted edge table; checkpointed rounds
-        # release via ContextCleaner on reassignment (see min-label)
+        # unpersist() frees the round-0 PERSISTED edge table;
+        # checkpointed rounds are a CacheManager no-op — their blocks
+        # are released by the ContextCleaner once the reassignment
+        # below drops the last reference
         edges.unpersist()
         edges = new_edges
         if not changed:
@@ -970,9 +883,8 @@ def _cc_star(
         edges.unpersist()
         all_nodes.unpersist()
         raise RuntimeError(
-            f"connected_components(algorithm='star') did not converge "
-            f"within max_iter={max_iter} rounds; O(log n) rounds suffice "
-            "on any graph — raise max_iter."
+            f"connected_components did not converge within {_CC_MAX_ROUNDS} "
+            "star rounds; O(log n) rounds suffice on any graph."
         )
     labels = (
         all_nodes.join(edges, all_nodes["node"] == edges["u"], "left")
@@ -996,7 +908,6 @@ def build_dedup_clusters(
     bands: int = 4,
     threshold: float = 0.5,
     portable: bool = False,
-    algorithm: str = "star",
     max_doc_freq: int | None = None,
     max_bucket_size: int | None = None,
     mode: str = "overwrite",
@@ -1024,30 +935,22 @@ def build_dedup_clusters(
     batch-extendable (:func:`extend_dedup_index`) without re-shingling
     the corpus — choose it when the corpus grows in place.
 
-    ``algorithm="star"`` (default) labels components in O(log n)
-    alternating large/small-star rounds (Kiveris et al. 2014) — the
-    scale-safe choice for arbitrary pair-graph shapes; ``"minlabel"``
-    is O(diameter) propagation, fine for the near-clique dup graphs
-    MinHash produces. The two skew guards (``max_doc_freq``,
-    ``max_bucket_size``) pass straight through to
-    :func:`minhash_dedup_pairs`."""
+    Components come from :func:`connected_components`. The two skew
+    guards (``max_doc_freq``, ``max_bucket_size``) pass straight
+    through to :func:`minhash_dedup_pairs`."""
     pairs = minhash_dedup_pairs(
         docs, text_col=text_col, id_col=id_col, n=n, num_hashes=num_hashes,
         bands=bands, threshold=threshold, portable=portable,
         max_doc_freq=max_doc_freq, max_bucket_size=max_bucket_size,
     )
-    if algorithm == "auto":
-        # "auto" probes the pair count and, on overflow, re-reads the
-        # input in the star fallback — against the LIVE minhash/verify
-        # chain that would re-execute the pipeline's most expensive
-        # stages twice (review catch; the index forms feed auto from
-        # stored parquet, where the re-read is a cheap truncated scan).
-        # Persist so probe and fallback share one materialization; the
-        # label write below is the consuming action.
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    comp = connected_components(
-        pairs, f"{id_col}_1", f"{id_col}_2", algorithm=algorithm
-    )
+    # connected_components probes the pair count and, on overflow,
+    # re-reads the input in the star fallback — against the LIVE
+    # minhash/verify chain that would re-execute the pipeline's most
+    # expensive stages twice (review catch; the index forms feed it
+    # stored parquet, where the re-read is a cheap truncated scan).
+    # Persist so probe and fallback share one materialization.
+    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    comp = connected_components(pairs, f"{id_col}_1", f"{id_col}_2")
     labels = (
         docs.select(F.col(id_col).cast("long").alias(id_col))
         .join(comp, F.col(id_col) == comp["node"], "left")
@@ -1056,17 +959,13 @@ def build_dedup_clusters(
             F.coalesce("cluster_id", F.col(id_col)).cast("long").alias("cluster_id"),
         )
     )
-    if algorithm == "auto":
-        # by the time connected_components(algorithm="auto") returns,
-        # the persist is fully consumed EITHER WAY: the driver fast
-        # path collected its probe and comp is a local relation that
-        # never references pairs, and the star fallback's rounds run
-        # eagerly (per-round convergence counts) into localCheckpoints
-        # that truncate lineage. Holding the cached blocks past this
-        # point is dead weight for the session lifetime (review catch —
-        # the old "caller's action consumes the persist" comment was
-        # wrong on the driver path).
-        pairs.unpersist()
+    # by the time connected_components returns, the persist is fully
+    # consumed EITHER WAY: the driver path collected its probe and comp
+    # is a local relation that never references pairs, and the star
+    # fallback's rounds run eagerly (per-round convergence counts) into
+    # localCheckpoints that truncate lineage. Holding the cached blocks
+    # past this point is dead weight for the session lifetime.
+    pairs.unpersist()
     if path is None:
         return labels
     labels.write.mode(mode).parquet(path)
@@ -1207,7 +1106,7 @@ def _build_dedup_index_locked(
     prof.write.mode("overwrite").parquet(f"{path}/profiles")
     edges.write.mode("overwrite").parquet(f"{path}/edges")
     stored_edges = spark.read.parquet(f"{path}/edges")
-    comp = connected_components(stored_edges, "id_1", "id_2", algorithm="auto")
+    comp = connected_components(stored_edges, "id_1", "id_2")
     labels = (
         docs.select(F.col(id_col).cast("long").alias(id_col))
         .join(comp, F.col(id_col) == comp["node"], "left")
@@ -1365,9 +1264,8 @@ def _write_sync_epoch(spark, path: str, side: str, epoch: int) -> None:
 
 
 def _read_sync_epoch(spark, path: str, side: str) -> int | None:
-    """None == no readable marker: absent (pre-marker artifact), the
-    earlier parquet-directory form, or torn — every case takes the
-    conservative migration/drift path in extend_dedup_index."""
+    """None == no readable marker: absent or torn — either case takes
+    the conservative full-scope drift path in extend_dedup_index."""
     txt = read_sidecar_text(spark, f"{path}/sync_{side}")
     if txt is None:
         return None
@@ -1422,45 +1320,23 @@ def _read_index_params(
 
     - readable: stored values, validated.
     - ABSENT (pre-sidecar artifact): explicit values / build defaults.
-    - present but UNREADABLE (torn file, parquet debris from a
-      crashed pre-JSON build): raise — silently probing with defaults
-      against an index built with different params is exactly the
-      quiet-corruption mode the sidecar exists to prevent.
-
-    A successfully read legacy parquet-directory sidecar is upgraded
-    in place to the JSON file form (extend is a writer anyway), so
-    extend-only artifacts stop paying the scheduled Spark read every
-    refresh."""
-    from pyspark.errors import AnalysisException
-
+    - present but UNREADABLE (torn file, or a directory at the params
+      path): raise — silently probing with defaults against an index
+      built with different params is exactly the quiet-corruption mode
+      the sidecar exists to prevent."""
     defaults = (3, 8, 4, 0.5)
     given = (n, num_hashes, bands, threshold)
     names = ("n", "num_hashes", "bands", "threshold")
-    kind = sidecar_kind(spark, f"{path}/params")
-    upgrade_legacy = False
-    if kind is None:
-        resolved = tuple(d if g is None else g for g, d in zip(given, defaults))
-        return (*resolved, 0)  # type: ignore[return-value]
-    if kind == "file":
-        row = read_sidecar_json(spark, f"{path}/params")
-        if row is None:
+    row = read_sidecar_json(spark, f"{path}/params")
+    if row is None:
+        if sidecar_present(spark, f"{path}/params"):
             raise ValueError(
                 f"{path}/params exists but is not a readable params "
                 "sidecar (torn write?); rebuild the index rather than "
                 "extending it with guessed parameters"
             )
-    else:  # legacy parquet-directory sidecar
-        try:
-            row = spark.read.parquet(f"{path}/params").first()
-        except AnalysisException:
-            row = None
-        if row is None:
-            raise ValueError(
-                f"{path}/params exists but is not a readable params "
-                "sidecar (crashed build?); rebuild the index rather "
-                "than extending it with guessed parameters"
-            )
-        upgrade_legacy = True
+        resolved = tuple(d if g is None else g for g, d in zip(given, defaults))
+        return (*resolved, 0)  # type: ignore[return-value]
     stored = (row["n"], row["num_hashes"], row["bands"], row["threshold"])
     for name, g, s in zip(names, given, stored):
         if g is not None and g != s:
@@ -1469,21 +1345,7 @@ def _read_index_params(
                 f"index's build-time {name}={s!r} (from {path}/params); "
                 "pass None to inherit the stored value"
             )
-    label_buckets = 0
-    if kind == "file":
-        label_buckets = int(row.get("label_buckets") or 0)
-    if upgrade_legacy:
-        write_sidecar_json(
-            spark,
-            f"{path}/params",
-            {
-                "n": int(stored[0]),
-                "num_hashes": int(stored[1]),
-                "bands": int(stored[2]),
-                "threshold": float(stored[3]),
-                "label_buckets": 0,  # legacy layouts are unbucketed
-            },
-        )
+    label_buckets = int(row.get("label_buckets") or 0)
     return (*stored, label_buckets)  # type: ignore[return-value]
 
 
@@ -1698,29 +1560,12 @@ def _extend_dedup_index_locked(
     # O(corpus) scan into the O(batch) path). On drift, fall back to
     # full CC for this refresh — it re-derives every label from the
     # stored edge table and self-heals the crashed batch's shingleable
-    # docs. Pre-marker artifacts (built before r7) pay the anti-join
-    # ONCE as the migration path; a successful refresh then writes
-    # both markers.
+    # docs. A missing or torn marker is drift too; the successful
+    # fallback refresh then writes both markers.
     p_epoch = _read_sync_epoch(spark, path, "profiles")
     l_epoch = _read_sync_epoch(spark, path, "labels")
-    if p_epoch is None or l_epoch is None:
-        # migration path; the anti-join only matters under "affected"
-        # ("full" re-derives everything regardless — skip the scan)
-        drift = cc_scope == "affected" and not (
-            old_prof.select(F.col("doc_id").cast("long").alias("doc_id"))
-            .join(
-                lbl.select(
-                    F.col(lbl.columns[0]).cast("long").alias("doc_id")
-                ),
-                "doc_id",
-                "left_anti",
-            )
-            .isEmpty()
-        )
-        epoch = 1
-    else:
-        drift = p_epoch != l_epoch
-        epoch = max(p_epoch, l_epoch) + 1
+    drift = p_epoch is None or l_epoch is None or p_epoch != l_epoch
+    epoch = max(p_epoch or 0, l_epoch or 0) + 1
     if drift and cc_scope == "affected":
         effective_scope = "full"
     # batch_profiles eagerly localCheckpoints its output (it fans out
@@ -1810,7 +1655,7 @@ def _extend_dedup_index_locked(
         # label rewrite, so a subsequent extend of a different batch
         # self-heals them (a crashed batch's shingle-less docs return
         # only via the documented replay). O(corpus) — needed by the
-        # full-scope rewrite and the legacy affected path; the
+        # full-scope rewrite and the unbucketed affected path; the
         # bucketed affected path replaces it with the touched-bucket
         # scope below. Eagerly checkpointed because the result is both
         # derived from path/labels and about to overwrite it.
@@ -1848,8 +1693,7 @@ def _extend_dedup_index_locked(
                 F.col(lbl.columns[0]).cast("long").alias("id_2"),
             )
             cc_input = cc_input.unionByName(lbl_star)
-        comp = connected_components(cc_input, "id_1", "id_2",
-                                    algorithm="auto")
+        comp = connected_components(cc_input, "id_1", "id_2")
         labels = (
             all_ids.join(comp, all_ids["doc_id"] == comp["node"], "left")
             .select(
@@ -1913,7 +1757,7 @@ def _extend_dedup_index_locked(
                 new_edges.select("id_1", "id_2")
             )
             comp = connected_components(
-                compressed, "id_1", "id_2", algorithm="auto"
+                compressed, "id_1", "id_2"
             ).localCheckpoint(eager=True)  # feeds the label write AND
             # the edge rewrite that runs after both overwrites
         # buckets whose labels may change = buckets of every node of
@@ -2003,7 +1847,7 @@ def _extend_dedup_index_locked(
         # drop the physical partition key: (id, cluster_id) contract
         return out.select(id_name, "cluster_id")
     else:
-        # affected-scope relabeling, legacy unbucketed layout. Old
+        # affected-scope relabeling, unbucketed layout. Old
         # labels are component minima, so each touched component's
         # (member -> old_label) rows are a star preserving both its
         # connectivity and its exact id set; CC over those stars + the
@@ -2072,9 +1916,7 @@ def _extend_dedup_index_locked(
             .filter(F.col("id_1") != F.col("id_2"))
             .unionByName(new_edges.select("id_1", "id_2"))
         )
-        comp = connected_components(
-            compressed, "id_1", "id_2", algorithm="auto"
-        )
+        comp = connected_components(compressed, "id_1", "id_2")
         # pre-overwrite snapshot of (id, old label) — labels is about
         # to replace the table this derives from
         prev = (
@@ -2090,7 +1932,7 @@ def _extend_dedup_index_locked(
                 ).cast("long").alias("cluster_id"),
             )
         )
-    # full scope / legacy affected: whole-table rewrite. labels derive
+    # full scope / unbucketed affected: whole-table rewrite. labels derive
     # from the just-appended parquet tables (not the in-flight
     # frames), so the overwrite below cannot invalidate its own inputs
     if bucketed:

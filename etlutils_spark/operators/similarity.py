@@ -34,7 +34,7 @@ from etlutils_spark.sources.sidecar import (
     acquire_writer_lease,
     read_sidecar_json,
     release_writer_lease,
-    sidecar_kind,
+    sidecar_present,
     verify_writer_lease,
     write_sidecar_json,
 )
@@ -1565,31 +1565,13 @@ def _read_ann_params(spark, path: str):
     collects the centroid and codebook tables, which a monitoring
     call has no use for (review catch — at production index sizes
     those are two needless driver-memory collects per health check)."""
-    kind = sidecar_kind(spark, f"{path}/params")
-    if kind == "file":
-        params = read_sidecar_json(spark, f"{path}/params")
-        if params is None:
+    params = read_sidecar_json(spark, f"{path}/params")
+    if params is None:
+        if sidecar_present(spark, f"{path}/params"):
             raise ValueError(
                 f"{path}/params exists but is not a readable params "
                 "sidecar (torn write?); rebuild the ANN index"
             )
-    elif kind == "dir":
-        # legacy parquet-directory sidecar from earlier r7 builds;
-        # _temporary debris from a crashed build raises
-        # AnalysisException before .first() — same ValueError either
-        # way (review catch)
-        from pyspark.errors import AnalysisException
-
-        try:
-            params = spark.read.parquet(f"{path}/params").first()
-        except AnalysisException:
-            params = None
-        if params is None:
-            raise ValueError(
-                f"{path}/params exists but holds no readable params "
-                "row (crashed build?); rebuild the ANN index"
-            )
-    else:
         raise ValueError(
             f"{path} is not a committed build_ann_index artifact "
             "(no params sidecar — the build's final write)"
@@ -1714,8 +1696,7 @@ def extend_ann_index(
     (default 2.0: the batch quantizes twice as badly as the corpus the
     quantizers were trained on) flips ``drifted`` and emits a warning;
     the remedy is the documented periodic rebuild. Observability only:
-    the batch still lands — drifted data is real data — and legacy
-    artifacts without a stored baseline skip the measurement.
+    the batch still lands — drifted data is real data.
 
     Single-writer ENFORCED via the ``path/.writer_lease`` sidecar
     (same contract as ``extend_dedup_index``): a concurrent extend
@@ -1785,22 +1766,18 @@ def _extend_ann_index_locked(
 
     params, cents, books = _read_ann_index(spark, path)
     dim = int(params["dim"])
-    params_d = params.asDict() if hasattr(params, "asDict") else params
-    baseline = params_d.get("qerr_mean")
+    from pyspark.sql import Observation
+
+    baseline = params["qerr_mean"]
+    obs = Observation()
     batch_codes = _assign_and_encode(
         new_vectors, cents, books, id_col, vec_col, dim,
         "extend_ann_index: batch vectors have dim {got} but the index "
         f"was built at dim {{want}} (from {path}/params)",
-        with_qerr=baseline is not None,
-    )
-    obs = None
-    if baseline is not None:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        batch_codes = batch_codes.observe(
-            obs, F.avg("__qerr").alias("m"), F.count(F.lit(1)).alias("n")
-        ).drop("__qerr")
+        with_qerr=True,
+    ).observe(
+        obs, F.avg("__qerr").alias("m"), F.count(F.lit(1)).alias("n")
+    ).drop("__qerr")
     stored_ids = spark.read.parquet(f"{path}/codes").select(id_col)
     fresh = batch_codes.join(stored_ids, id_col, "left_anti")
     if commit_check is not None:
@@ -1816,35 +1793,34 @@ def _extend_ann_index_locked(
         # replay-idempotent — a legitimate re-run anti-joins the
         # already-appended ids away).
         commit_check()
-    if obs is not None:
-        stat = obs.get  # ready: the write action above has completed
-        if stat["n"]:
-            # a 0.0 baseline (degenerate all-duplicate training
-            # sample) makes ANY nonzero batch error infinite drift
-            # — correct: the quantizers know exactly one point
-            ratio = float(stat["m"]) / max(float(baseline), 1e-300)
-            drifted = bool(ratio > drift_ratio_threshold)
-            write_sidecar_json(
-                spark,
-                f"{path}/drift",
-                {
-                    "batch_qerr_mean": float(stat["m"]),
-                    "build_qerr_mean": float(baseline),
-                    "ratio": ratio,
-                    "threshold": float(drift_ratio_threshold),
-                    "drifted": drifted,
-                    "batch_rows": int(stat["n"]),
-                },
+    stat = obs.get  # ready: the write action above has completed
+    if stat["n"]:
+        # a 0.0 baseline (degenerate all-duplicate training
+        # sample) makes ANY nonzero batch error infinite drift
+        # — correct: the quantizers know exactly one point
+        ratio = float(stat["m"]) / max(float(baseline), 1e-300)
+        drifted = bool(ratio > drift_ratio_threshold)
+        write_sidecar_json(
+            spark,
+            f"{path}/drift",
+            {
+                "batch_qerr_mean": float(stat["m"]),
+                "build_qerr_mean": float(baseline),
+                "ratio": ratio,
+                "threshold": float(drift_ratio_threshold),
+                "drifted": drifted,
+                "batch_rows": int(stat["n"]),
+            },
+        )
+        if drifted:
+            warnings.warn(
+                f"extend_ann_index: batch quantization error is "
+                f"{ratio:.2f}x the build baseline (threshold "
+                f"{drift_ratio_threshold}) — the frozen "
+                f"quantizers no longer fit the ingest "
+                f"distribution; schedule a rebuild of {path}",
+                stacklevel=2,
             )
-            if drifted:
-                warnings.warn(
-                    f"extend_ann_index: batch quantization error is "
-                    f"{ratio:.2f}x the build baseline (threshold "
-                    f"{drift_ratio_threshold}) — the frozen "
-                    f"quantizers no longer fit the ingest "
-                    f"distribution; schedule a rebuild of {path}",
-                    stacklevel=2,
-                )
     return spark.read.parquet(f"{path}/codes")
 
 
@@ -1887,7 +1863,7 @@ def ann_index_stats(spark, path: str) -> DataFrame:
 def ann_index_drift(spark, path: str) -> dict | None:
     """The last extend's drift record for a ``build_ann_index``
     artifact (``path/drift``), or None when no extend has measured one
-    (fresh build, or a legacy artifact without a stored baseline).
+    (fresh build, or only empty batches since).
     Keys: batch_qerr_mean, build_qerr_mean, ratio, threshold, drifted,
     batch_rows — see ``extend_ann_index``'s drift contract."""
     return read_sidecar_json(spark, f"{path}/drift")

@@ -100,17 +100,11 @@ class ConditionalPutLeaseProvider:
     configured staleness window. The window travels IN the record so a
     ``verify`` from a different provider instance/process than the
     acquirer re-extends by the acquirer's window, not a hard-coded
-    default (review catch — the in-memory ``self._stale`` map only
-    exists in the acquiring process). Two-field records written by
-    older builds still decode (window absent -> the verifier's
-    fallback); the REVERSE is not true — an older build's decoder
-    crashes on a three-field record, so a mixed-version fleet must
-    upgrade all writers of a given lock URL together (flag-day per
-    lock), the standard constraint for a record-format extension. A
-    lease is LIVE while ``clock() < expires_at`` and
-    stealable after; every transition (acquire, steal, extend, release)
-    is one conditional write, so concurrent writers serialize on the
-    store's atomicity and exactly one wins each race.
+    default (review catch — an in-memory map only exists in the
+    acquiring process). A lease is LIVE while ``clock() < expires_at``
+    and stealable after; every transition (acquire, steal, extend,
+    release) is one conditional write, so concurrent writers serialize
+    on the store's atomicity and exactly one wins each race.
 
     ``heartbeat=True`` (default) starts a daemon thread per held lease
     that CAS-extends the expiry every ``stale_after_sec / 3`` — the
@@ -132,19 +126,16 @@ class ConditionalPutLeaseProvider:
         self._heartbeat = heartbeat
         # (url, token) -> threading.Event that stops the beat
         self._beats: dict[tuple[str, str], threading.Event] = {}
-        self._stale: dict[tuple[str, str], float] = {}
 
     @staticmethod
     def _encode(token: str, expires_at: float, stale_after: float) -> str:
         return f"{token}:{expires_at!r}:{stale_after!r}"
 
     @staticmethod
-    def _decode(record: str) -> tuple[str, float, float | None]:
-        """-> (token, expires_at, stale_after-or-None). The third field
-        is None for legacy two-field records."""
-        token, _, rest = record.partition(":")
-        exp, _, stale = rest.partition(":")
-        return token, float(exp), float(stale) if stale else None
+    def _decode(record: str) -> tuple[str, float, float]:
+        """-> (token, expires_at, stale_after)."""
+        token, exp, stale = record.split(":")
+        return token, float(exp), float(stale)
 
     # -- the three seam methods (duck-typed by sidecar) ----------------
 
@@ -159,7 +150,7 @@ class ConditionalPutLeaseProvider:
                 if self._store.put_if_absent(url, record):
                     return self._won(url, token, stale_after_sec)
                 continue  # lost a create race — re-read
-            _, expires_at, _stale = self._decode(current)
+            _, expires_at, _ = self._decode(current)
             if self._clock() < expires_at:
                 raise ValueError(
                     f"another writer holds the lease at {url} (expires "
@@ -184,17 +175,10 @@ class ConditionalPutLeaseProvider:
                 "interleaving on one artifact; re-acquire and re-run "
                 "this mutation"
             )
-        _, expires_at, rec_stale = self._decode(current)
         # the acquirer's window travels in the record, so a verify from
         # a DIFFERENT provider instance/process re-extends by the
-        # configured window; self._stale covers legacy two-field
-        # records in the acquiring process; 600s only when both are
-        # absent (cross-instance verify of a legacy record)
-        stale_after = (
-            rec_stale
-            if rec_stale is not None
-            else self._stale.get((url, token), 600.0)
-        )
+        # configured window
+        _, expires_at, stale_after = self._decode(current)
         if self._clock() >= expires_at:
             # ours but expired (the beat stalled): a thief may CAS it
             # away at any moment — re-extend through CAS so ownership
@@ -220,7 +204,6 @@ class ConditionalPutLeaseProvider:
         stop = self._beats.pop((url, token), None)
         if stop is not None:
             stop.set()
-        self._stale.pop((url, token), None)
         # re-read-and-retry: a single get+delete_if races our OWN
         # in-flight heartbeat CAS-extend (the beat re-encodes a new
         # expiry between our read and the conditional delete), which
@@ -254,7 +237,6 @@ class ConditionalPutLeaseProvider:
     # -- internals ------------------------------------------------------
 
     def _won(self, url: str, token: str, stale_after_sec: float) -> str:
-        self._stale[(url, token)] = stale_after_sec
         if self._heartbeat:
             stop = threading.Event()
             self._beats[(url, token)] = stop

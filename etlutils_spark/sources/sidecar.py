@@ -14,8 +14,8 @@ store (HDFS, S3A, local).
 Commit discipline: write-to-temp + rename. Atomic on HDFS and local
 filesystems; copy-rename on object stores, where a torn read parses as
 ``None``. Callers decide what ``None`` means by pairing the read with
-:func:`sidecar_kind`: for EPOCH MARKERS it is the conservative path
-(drift fallback / migration — weaker stores degrade to correctness,
+:func:`sidecar_present`: for EPOCH MARKERS it is the conservative path
+(drift fallback — weaker stores degrade to correctness,
 not corruption), while for PARAMS sidecars "present but unreadable" is
 corruption and must RAISE, because extending an index with guessed
 parameters fails silently (see ``dedup._read_index_params``).
@@ -79,112 +79,52 @@ def _read_lease_token(jvm, fs, target) -> str | None:
         return None
 
 
-def sidecar_kind(spark, url: str) -> str | None:
-    """``"file"`` (the FS-API sidecar form), ``"dir"`` (the legacy
-    parquet-directory form), or ``None`` (absent). Lets callers
-    distinguish "present but unreadable" (corruption — be loud) from
-    "absent" (pre-sidecar artifact — take the documented fallback),
-    which a bare read-returning-None cannot."""
+def sidecar_present(spark, url: str) -> bool:
+    """Whether anything exists at ``url``. Lets callers distinguish
+    "present but unreadable" (corruption — be loud) from "absent"
+    (pre-sidecar artifact — take the documented fallback), which a bare
+    read-returning-None cannot."""
     _, fs, target = _fs_path(spark, url)
-    if not fs.exists(target):
-        return None
-    return "dir" if fs.getFileStatus(target).isDirectory() else "file"
+    return bool(fs.exists(target))
 
 
 def params_committed(spark, url: str) -> bool:
     """True iff a params sidecar at ``url`` is present AND readable —
     i.e. the artifact build whose COMMIT MARKER it is actually
     committed. Presence alone is not enough: a build that crashed
-    mid-params-write can leave an unreadable stub (a torn file, or a
-    parquet directory holding only _temporary debris), and a bootstrap
+    mid-params-write can leave an unreadable stub, and a bootstrap
     that mistakes that for "committed" would extend a half-built
     artifact with guessed params instead of rebuilding it."""
-    from pyspark.errors import AnalysisException
-
-    kind = sidecar_kind(spark, url)
-    if kind == "file":
-        return read_sidecar_json(spark, url) is not None
-    if kind == "dir":  # legacy parquet form
-        try:
-            # readable AND non-empty: a schema-only directory whose
-            # data file was lost would route callers to an extend that
-            # then raises on row=None (review catch)
-            return spark.read.parquet(url).first() is not None
-        except AnalysisException:
-            return False
-    return False
+    return read_sidecar_json(spark, url) is not None
 
 
 def bootstrap_action(spark, url: str) -> str:
     """What a streaming ingest's cold-start probe should do, given the
     state of the build's params commit marker at ``url``:
 
-    - ``"extend"``  — committed (readable file or readable legacy
-      parquet directory): fold the batch into the existing artifact.
-    - ``"build"``   — ABSENT, or unreadable legacy-DIRECTORY debris on
-      an otherwise-empty artifact path (a crashed pre-JSON build;
-      both writers emit params as the build's last write, so that
-      state can only mean "no committed artifact"): bootstrap from
-      this batch.
-    - raises        — a torn params FILE, or an unreadable legacy
-      params DIRECTORY with sibling artifact tables (labels / edges /
-      codes ...) next to it. The JSON writer commits via temp+rename,
-      so a torn file essentially only happens to an already-committed
-      artifact on a rename-weak store; and a legacy directory that
-      lost its data file post-commit still has the committed artifact
-      tables beside it. Rebuilding from one micro-batch in either
-      state would silently DESTROY the stored corpus (review catches —
-      "absent" and "damaged" must not share the rebuild path, in
-      either sidecar generation)."""
-    from pyspark.errors import AnalysisException
-
-    # one kind stat + one content read per path (review catch: routing
-    # through params_committed re-statted the kind and re-read the
-    # JSON, doubling the cold-start FS round-trips and opening a
-    # TOCTOU seam between the torn-file check and the verdict)
-    kind = sidecar_kind(spark, url)
-    if kind == "file":
-        if read_sidecar_json(spark, url) is None:
-            raise ValueError(
-                f"{url} exists but is not readable (torn write?): this "
-                "looks like a DAMAGED committed artifact, not a fresh "
-                "path — refusing to bootstrap over it; restore the "
-                "params sidecar or rebuild explicitly"
-            )
+    - ``"extend"``  — committed (readable params file): fold the batch
+      into the existing artifact.
+    - ``"build"``   — ABSENT: bootstrap from this batch.
+    - raises        — present but unreadable (a torn file, or a
+      directory at the params path). The JSON writer commits via
+      temp+rename, so a torn file essentially only happens to an
+      already-committed artifact on a rename-weak store; rebuilding
+      from one micro-batch would silently DESTROY the stored corpus
+      (review catch — "absent" and "damaged" must not share the
+      rebuild path)."""
+    # stat BEFORE read: a concurrent build only ever moves the marker
+    # from absent to committed (rename commit), so this order cannot
+    # mistake a build landing between the two calls for damage
+    if not sidecar_present(spark, url):
+        return "build"
+    if read_sidecar_json(spark, url) is not None:
         return "extend"
-    if kind is None:
-        return "build"
-    # legacy parquet-directory form: readable AND non-empty = committed
-    # (same rule as params_committed)
-    try:
-        committed = spark.read.parquet(url).first() is not None
-    except AnalysisException:
-        committed = False
-    if not committed:
-        # unreadable legacy parquet directory: only a crashed build —
-        # i.e. nothing else on the artifact path — may rebuild; with
-        # committed sibling tables present this is damage, not absence
-        _, fs, target = _fs_path(spark, url)
-        parent = target.getParent()
-        siblings = (
-            [s.getPath().getName() for s in fs.listStatus(parent)]
-            if parent is not None and fs.exists(parent)
-            else []
-        )
-        real = [
-            n for n in siblings
-            if n != target.getName() and not n.startswith((".", "_"))
-        ]
-        if real:
-            raise ValueError(
-                f"{url} is an unreadable legacy params directory but "
-                f"sibling artifact tables exist ({sorted(real)}): this "
-                "looks like a DAMAGED committed artifact, not a fresh "
-                "path — refusing to bootstrap over it; restore the "
-                "params sidecar or rebuild explicitly"
-            )
-        return "build"
-    return "extend"
+    raise ValueError(
+        f"{url} exists but is not readable (torn write?): this "
+        "looks like a DAMAGED committed artifact, not a fresh "
+        "path — refusing to bootstrap over it; restore the "
+        "params sidecar or rebuild explicitly"
+    )
 
 
 # live heartbeat threads, keyed by (url, token); the Event stops the
@@ -615,7 +555,7 @@ def verify_writer_lease(spark, url: str, token: str) -> None:
     if state is None:
         touch = _LEASE_TOUCH.get((url, token))
         if touch is None:
-            return  # no beat record (foreign/legacy token) — nothing to judge
+            return  # no beat record (token not ours) — nothing to judge
         last_touch, stale_after = touch
         if time.time() - last_touch <= stale_after:
             return  # heartbeat demonstrably fresh — liveness is its guarantee
@@ -713,13 +653,11 @@ def write_sidecar_text(spark, url: str, text: str) -> None:
     atomic-replace primitive HDFS/local provide), so rewriting an
     EXISTING sidecar never exposes an absent-file window: the old
     delete-then-rename commit had one, and a concurrent lease-less
-    cold-start probe (``bootstrap_action``) reading in that window got
-    kind=None -> "build" and rebuilt the artifact from one micro-batch
-    (review catch). A recursive delete still retires a legacy parquet
-    DIRECTORY at the same path first (rename cannot replace a
-    non-empty directory; those migration rewrites run lease-guarded),
-    and stores whose FileContext lacks atomic rename fall back to the
-    old two-step with its documented window."""
+    cold-start probe (``bootstrap_action``) reading in that window saw
+    no sidecar -> "build" and rebuilt the artifact from one micro-batch
+    (review catch). Stores whose FileContext lacks atomic rename fall
+    back to the old two-step with its documented window; a non-empty
+    directory at ``url`` is never deleted, so that commit raises."""
     jvm, fs, target = _fs_path(spark, url)
     parent, name = url.rsplit("/", 1)
     tmp = jvm.org.apache.hadoop.fs.Path(f"{parent}/.{name}.tmp")
@@ -728,8 +666,6 @@ def write_sidecar_text(spark, url: str, text: str) -> None:
         stream.write(bytearray(text.encode("utf-8")))
     finally:
         stream.close()
-    if fs.exists(target) and fs.getFileStatus(target).isDirectory():
-        fs.delete(target, True)  # legacy parquet dir: migration path
     try:
         conf = spark.sparkContext._jsc.hadoopConfiguration()
         fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(conf)
@@ -740,15 +676,15 @@ def write_sidecar_text(spark, url: str, text: str) -> None:
         return
     except Exception:  # noqa: BLE001 - store without FileContext rename
         pass
-    fs.delete(target, True)
+    fs.delete(target, False)
     if not fs.rename(tmp, target):
         raise IOError(f"could not commit sidecar {url}")
 
 
 def read_sidecar_text(spark, url: str) -> str | None:
     """File contents, or None when unreadable as a sidecar FILE:
-    absent, a legacy parquet directory, or an IO error. Callers route
-    None through their conservative path."""
+    absent, a directory, or an IO error. Callers route None through
+    their conservative path."""
     from py4j.protocol import Py4JJavaError
 
     jvm, fs, target = _fs_path(spark, url)
@@ -769,8 +705,8 @@ def write_sidecar_json(spark, url: str, obj: dict[str, Any]) -> None:
 
 
 def read_sidecar_json(spark, url: str) -> dict[str, Any] | None:
-    """Parsed JSON object, or None for absent / legacy-directory /
-    torn content (same conservative-path contract as the text form)."""
+    """Parsed JSON object, or None for absent / directory / torn
+    content (same conservative-path contract as the text form)."""
     txt = read_sidecar_text(spark, url)
     if txt is None:
         return None

@@ -403,20 +403,17 @@ def ref_components(edges):
     )
 )
 def test_connected_components_auto_matches_reference(spark, edges):
-    """Every algorithm — the driver union-find fast path ('auto' under
-    the limit), the star rounds, min-label propagation — must produce
-    the reference labeling (component minimum) on arbitrary small
-    graphs, including self-loops, parallel edges, and reversed
-    duplicates that hypothesis generates freely."""
-    from etlutils_spark.operators.dedup import connected_components
+    """Both sides of connected_components' size choice — the driver
+    union-find and the star rounds — must produce the reference
+    labeling (component minimum) on arbitrary small graphs, including
+    self-loops, parallel edges, and reversed duplicates that
+    hypothesis generates freely."""
+    from etlutils_spark.operators.dedup import _cc_driver_small, _cc_star
 
     df = spark.createDataFrame(edges, "doc_id_1 long, doc_id_2 long")
     want = ref_components(edges)
-    for algo in ("auto", "star", "minlabel"):
+    for algo in (_cc_driver_small, _cc_star):
         got = sorted(
-            tuple(r)
-            for r in connected_components(
-                df, algorithm=algo, max_iter=40
-            ).collect()
+            tuple(r) for r in algo(df, "doc_id_1", "doc_id_2").collect()
         )
-        assert got == want, (algo, edges)
+        assert got == want, (algo.__name__, edges)

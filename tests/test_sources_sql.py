@@ -95,20 +95,29 @@ def test_ingest_verbose_schedules_no_extra_jobs(spark, star, tmp_path, capsys):
     Spark jobs vs verbose=False, and in particular no re-scan of the
     just-written table (VERDICT.md r5 'What's wrong' #2)."""
 
-    def n_jobs():
-        # total jobs this app has run, from the JVM app status store
-        return spark._jsc.sc().statusStore().jobsList(None).size()
+    import uuid
+
+    sc = spark.sparkContext
+
+    def n_jobs(**kw):
+        # jobs scoped to this one call: its own job group, counted only
+        # after the listener bus has delivered every job event, so
+        # neither load nor jobs from earlier tests can leak in
+        group = f"ingest-verbose-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "test_ingest_verbose_schedules_no_extra_jobs")
+        try:
+            ingest_to_parquet(df, str(tmp_path / group), mode="overwrite",
+                              **kw)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
 
     df = star["region"]
-    before = n_jobs()
-    ingest_to_parquet(df, str(tmp_path / "quiet"), mode="overwrite")
-    quiet_jobs = n_jobs() - before
+    quiet_jobs = n_jobs()
+    loud_jobs = n_jobs(verbose=True)
 
-    before = n_jobs()
-    ingest_to_parquet(df, str(tmp_path / "loud"), mode="overwrite",
-                      verbose=True)
-    loud_jobs = n_jobs() - before
-
+    assert quiet_jobs > 0  # the group really scoped the ingest's jobs
     assert loud_jobs == quiet_jobs
     msg = capsys.readouterr().out
     assert "rows" in msg and "TOTAL=" in msg

@@ -225,7 +225,7 @@ def render(spark) -> str:
         tree = re.sub(r", Statistics\([^)]*\)", "", tree)
         lines = tree.strip().splitlines()
         if len(lines) > 200:
-            # iterative operators (e.g. min-label propagation) unroll
+            # iterative operators (e.g. star CC rounds) unroll
             # into repeating plan blocks — the head carries the shape
             tree = "\n".join(lines[:200]) + (
                 f"\n... [{len(lines) - 200} further lines: the iterative"

@@ -77,7 +77,7 @@ def _wrap() -> None:
     for name in (
         "write_sidecar_text",
         "read_sidecar_text",
-        "sidecar_kind",
+        "sidecar_present",
         "read_sidecar_json",
         "acquire_writer_lease",
         "release_writer_lease",

@@ -115,7 +115,7 @@ def total_shuffle_write(spark) -> int:
 
 def run_scale(spark, n: int) -> dict:
     from etlutils_spark.operators.dedup import (
-        connected_components,
+        _cc_star,
         lsh_candidate_pairs,
         minhash_dedup_pairs,
         minhash_signatures,
@@ -160,9 +160,7 @@ def run_scale(spark, n: int) -> dict:
     # stage C: star CC over the verified pairs
     t0 = time.time()
     stats: dict = {}
-    comp = connected_components(
-        pairs, "doc_id_1", "doc_id_2", algorithm="star", stats=stats
-    )
+    comp = _cc_star(pairs, "doc_id_1", "doc_id_2", stats=stats)
     n_clusters = comp.select("cluster_id").distinct().count()
     out["cc_sec"] = round(time.time() - t0, 2)
     out["cc_rounds"] = stats.get("rounds")
